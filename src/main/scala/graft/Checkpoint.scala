@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.concurrent.{Await, ExecutionContext, Future, Promise, blocking}
+import scala.concurrent.duration.Duration
+
 /** Warehouse persistence for TRAINED artifacts and their
   * deterministic derived frames — the cross-session counterpart of
   * [[Memo]]. A trained model's parameters (the NAR joint, k-means
@@ -70,11 +73,6 @@ object Checkpoint {
     rootOverride.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_CKPT_DIR", "models/graft_ckpt"))
 
-  /** Per-(dir, table) row counts for fingerprints — a parquet count is
-    * metadata-only but still a job; cache it for the process lifetime. */
-  private val counts =
-    scala.collection.concurrent.TrieMap[(String, String), Long]()
-
   /** Modulus of the fingerprint fold: a prime < 2^31, so every
     * intermediate (acc × 1000003 + n) stays < 2^51 — exact in BIGINT
     * on any engine, which lets `model_store`'s oracle re-derive the
@@ -132,7 +130,7 @@ object Checkpoint {
     * syntax: embeddings' first coordinate (Spark `element_at` is
     * 1-based; DuckDB lists index 1-based with `[..]`), on the exact
     * micro grid after an explicit promote to double on both engines. */
-  private val checksumInputSpark: Map[String, String] =
+  private[graft] val checksumInputSpark: Map[String, String] =
     checksumInput + ("embeddings" ->
       ("concat(coalesce(cast(vec_id as string),'~'),'|'," +
         "coalesce(cast(label as string),'~'),'|'," +
@@ -146,35 +144,56 @@ object Checkpoint {
         "coalesce(cast(cast(floor(cast(embedding[1] as double)" +
         "*1000000.0+0.5) as bigint) as string),'~'))"))
 
-  /** Per-(dir, table) content checksums — one deliberate column scan
-    * per training table per process (cached, like [[counts]]). At
-    * warehouse scale this is the one non-metadata cost of the key;
-    * a production deployment would fold the same sum at ingest and
-    * store it as table metadata — the CONTRACT (order-independent
-    * modular sum of per-row md5 terms) is ingest-incremental by
-    * construction (appends add terms; nothing is order-sensitive). */
-  private val checks =
-    scala.collection.concurrent.TrieMap[(String, String), Long]()
+  /** Per-(dir, table) (row count, content checksum), kept for the
+    * process lifetime. The first caller that needs a table claims its
+    * entry and fills it from its one scan action ([[tableStats]]);
+    * concurrent callers wait on the claimed entry instead of scanning
+    * the table again. A failed scan drops its claims, so a later call
+    * retries. At warehouse scale the checksum is the one non-metadata
+    * cost of the key; a production deployment would fold the same sum
+    * at ingest and store it as table metadata — the CONTRACT
+    * (order-independent modular sum of per-row md5 terms) is
+    * ingest-incremental by construction (appends add terms; nothing is
+    * order-sensitive). */
+  private val stats =
+    scala.collection.concurrent.TrieMap[(String, String), Promise[(Long, Long)]]()
 
-  /** Per-(dir, table) locks so concurrent first callers (parallel warm
-    * pass) don't run the same full-column checksum scan twice. */
-  private val chkLocks =
-    scala.collection.concurrent.TrieMap[(String, String), Object]()
-
-  private[graft] def tableChecksum(spark: SparkSession, dir: String, t: String): Long =
-    checks.get((dir, t)).getOrElse {
-      chkLocks.putIfAbsent((dir, t), new Object)
-      chkLocks((dir, t)).synchronized {
-        checks.getOrElseUpdate((dir, t), {
+  /** (row count, content checksum) of each named table. Every table not
+    * yet claimed is scanned by ONE Spark action: a union of per-table
+    * `count(1)` + checksum aggregates, so each table is read once and
+    * the scans of different tables run concurrently in one plan
+    * instead of as two sequential jobs per table. */
+  private def tableStats(spark: SparkSession, dir: String,
+      tables: Seq[String]): Map[String, (Long, Long)] = {
+    val entries = tables.distinct.map { t =>
+      val p = Promise[(Long, Long)]()
+      (t, stats.putIfAbsent((dir, t), p).getOrElse(p), p)
+    }
+    val claimed = entries.collect { case (t, e, p) if e eq p => t -> p }.toMap
+    if (claimed.nonEmpty)
+      try {
+        // opening a table whose read relation is not cached runs one
+        // schema-inference job; open the claimed tables concurrently
+        implicit val ec: ExecutionContext = ExecutionContext.global
+        val aggs = claimed.keys.toSeq.map { t =>
           val ci = checksumInputSpark.getOrElse(t,
             sys.error(s"no checksum spec for table $t — add one to Checkpoint"))
-          Tables(spark, dir, t)
-            .selectExpr("coalesce(sum(cast(conv(substring(md5(" + ci +
-              s"),1,13),16,10) as bigint) % $chkTermMod),0) as c")
-            .head().getLong(0) % fingerprintMod
-        })
+          Future(blocking(Tables(spark, dir, t).selectExpr(s"'$t' as t", "count(1) as n",
+            "coalesce(sum(cast(conv(substring(md5(" + ci +
+              s"),1,13),16,10) as bigint) % $chkTermMod),0) as c")))
+        }
+        Await.result(Future.sequence(aggs), Duration.Inf)
+          .reduce(_ union _).collect().foreach { r =>
+          claimed(r.getString(0))
+            .success((r.getLong(1), r.getLong(2) % fingerprintMod))
+        }
+      } catch {
+        case e: Throwable =>
+          claimed.foreach { case (t, p) => stats.remove((dir, t), p); p.tryFailure(e) }
+          throw e
       }
-    }
+    entries.map { case (t, e, _) => t -> Await.result(e.future, Duration.Inf) }.toMap
+  }
 
   /** Order-sensitive combined fingerprint of the named training-input
     * tables: a polynomial fold (mod [[fingerprintMod]]) interleaving
@@ -183,16 +202,18 @@ object Checkpoint {
     * edits — without it, a regenerated table with identical
     * cardinality would silently serve stale trained parameters AND
     * stale persisted eval truths (the gate would lose independence
-    * from the artifact it checks). */
-  def tableFingerprint(spark: SparkSession, dir: String, tables: String*): Long =
+    * from the artifact it checks). Tables not yet in [[stats]] cost
+    * one Spark action per call, however many there are. */
+  def tableFingerprint(spark: SparkSession, dir: String, tables: String*): Long = {
+    val st = tableStats(spark, dir, tables)
     tables.foldLeft(17L) { (acc, t) =>
-      val n = counts.getOrElseUpdate((dir, t), Tables(spark, dir, t).count())
-      val c = tableChecksum(spark, dir, t)
+      val (n, c) = st(t)
       (((acc * 1000003L + n) % fingerprintMod) * 1000003L + c) % fingerprintMod
     }
+  }
 
   /** One table's checksum aggregate as DuckDB SQL (the oracle's half
-    * of [[tableChecksum]] — identical concat input, identical per-term
+    * of [[tableStats]]' checksum — identical concat input, identical per-term
     * mod, hex-prefix cast instead of `conv`). */
   def checksumSql(t: String): String =
     s"SELECT COALESCE(SUM(CAST(('0x' || substr(md5(${checksumInputDuck(t)})" +

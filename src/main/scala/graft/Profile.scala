@@ -109,7 +109,9 @@ object Profile {
           Some(f"$n%-28s build=$build%7.3f plan=$plan%7.3f exec=$exec%7.3f total=${build + plan + exec}%7.3f")
         } catch {
           case scala.util.control.NonFatal(e) =>
-            Some(f"$n%-28s FAILED: ${e.getMessage.linesIterator.next()}")
+            val msg = Option(e.getMessage).filter(_.nonEmpty)
+              .map(_.linesIterator.next()).getOrElse(e.getClass.getName)
+            Some(f"$n%-28s FAILED: $msg")
         }
       row.foreach(r => println(s"[profile-row] $r"))
       row

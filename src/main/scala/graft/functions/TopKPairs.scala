@@ -17,15 +17,19 @@ import org.apache.spark.sql.expressions.Aggregator
   * Selection = the k smallest (key, id) under (key asc|desc, id asc),
   * ties on key broken by id exactly like the window's ORDER BY, and
   * the output array is emitted in that order (rank i = element i+1).
-  * Scala primitive-double `==`/`<` treat -0.0 == 0.0, matching Spark's
-  * normalized float ordering; keys are never NaN in the call sites
-  * (quantized cosines of nonzero vectors).
+  * Keys compare like Spark's normalized float ordering: -0.0 == 0.0,
+  * and NaN equals NaN and ranks above every other value (last when
+  * ascending, first when descending), so the buffer never depends on
+  * arrival order — a zero vector's cosine is NaN (0/0).
   */
 class TopKPairs(k: Int, descKey: Boolean)
     extends Aggregator[(Double, Long), (Array[Double], Array[Long]), Seq[(Double, Long)]] {
 
-  private def lt(k1: Double, i1: Long, k2: Double, i2: Long): Boolean =
-    if (k1 != k2) { if (descKey) k1 > k2 else k1 < k2 } else i1 < i2
+  private def lt(k1: Double, i1: Long, k2: Double, i2: Long): Boolean = {
+    // `+ 0.0` turns -0.0 into 0.0; Double.compare then ranks NaN largest
+    val c = java.lang.Double.compare(k1 + 0.0, k2 + 0.0)
+    if (c != 0) { if (descKey) c > 0 else c < 0 } else i1 < i2
+  }
 
   override def zero: (Array[Double], Array[Long]) =
     (Array.empty[Double], Array.empty[Long])

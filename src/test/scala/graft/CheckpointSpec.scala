@@ -121,4 +121,32 @@ class CheckpointSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
   }
+
+  test("tableFingerprint keys the committed store and matches the per-table fold") {
+    val dir = freshSfCopy("graft-ckpt-fold")
+    try {
+      val d = dir.getPath
+      val tables = QueriesEstimators.modelEstsFpTables
+      val (fp, scans) = scansUnder(d)(Checkpoint.tableFingerprint(spark, d, tables: _*))
+      // the reference fold: one count() and one checksum aggregate per
+      // table, folded in table order
+      val m = Checkpoint.fingerprintMod
+      val expected = tables.foldLeft(17L) { (acc, t) =>
+        val df = Tables(spark, d, t)
+        val c = df.selectExpr("coalesce(sum(cast(conv(substring(md5(" +
+          Checkpoint.checksumInputSpark(t) + "),1,13),16,10) as bigint) % " +
+          s"${Checkpoint.chkTermMod}),0) as c").head().getLong(0) % m
+        (((acc * 1000003L + df.count()) % m) * 1000003L + c) % m
+      }
+      assert(fp == expected, "one-action fingerprint drifted from the per-table fold")
+      assert(new java.io.File(s"models/graft_ckpt/${Checkpoint.schemaVersion}/sf0.001-$fp")
+        .isDirectory, s"fingerprint $fp keys no committed sf0.001 store entry")
+      assert(scans == Seq(tables.toSet),
+        s"expected one SQL execution scanning all ${tables.size} tables, saw $scans")
+      val (again, rescans) =
+        scansUnder(d)(Checkpoint.tableFingerprint(spark, d, tables: _*))
+      assert(rescans.isEmpty, s"a cached fingerprint ran SQL executions: $rescans")
+      assert(again == fp, "a cached fingerprint changed value")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
 }

@@ -15,13 +15,13 @@ import scala.concurrent.duration.Duration
   */
 class ConcurrencySpec extends SparkSpec {
 
-  private def onPool[T](n: Int)(work: Int => T): Seq[T] = {
+  private def onPool[T](n: Int, timeout: Duration = Duration.Inf)(work: Int => T): Seq[T] = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
     try {
       implicit val ec: ExecutionContext =
         ExecutionContext.fromExecutorService(pool)
       Await.result(
-        Future.sequence((0 until n).map(i => Future(work(i)))), Duration.Inf)
+        Future.sequence((0 until n).map(i => Future(work(i)))), timeout)
     } finally pool.shutdown()
   }
 
@@ -73,5 +73,24 @@ class ConcurrencySpec extends SparkSpec {
     }
     assert(counts.zipWithIndex.forall { case (n, i) => n == counts.head - i },
       s"per-key results wrong under concurrency: $counts")
+  }
+
+  test("concurrent fingerprints of overlapping table sets scan each table exactly once") {
+    val dir = freshSfCopy("graft-conc-fp")
+    try {
+      val d = dir.getPath
+      // four overlapping windows over all ten tables, two threads each
+      val sets = (0 until 4).map(k => Tables.all.slice(2 * k, 2 * k + 4))
+      // a deadlock shows as a timeout here, not as a hung suite
+      val (fps, scans) = scansUnder(d)(onPool(8, Duration(5, "min")) { i =>
+        Checkpoint.tableFingerprint(spark, d, sets(i % 4): _*)
+      })
+      val scanned = scans.flatMap(_.toSeq)
+      assert(scanned.sorted == Tables.all.sorted,
+        s"every table must be scanned exactly once across all threads: $scans")
+      for (i <- 0 until 8)
+        assert(fps(i) == Checkpoint.tableFingerprint(spark, sf, sets(i % 4): _*),
+          s"thread $i got a fingerprint that differs from an uncontended one")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
   }
 }

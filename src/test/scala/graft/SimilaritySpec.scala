@@ -136,4 +136,22 @@ class SimilaritySpec extends SparkSpec {
       .count()
     assert(bad == 0L)
   }
+
+  test("TopKPairs ranks NaN keys largest, -0.0 as 0.0, independent of arrival order") {
+    val in = Seq((Double.NaN, 1L), (0.5, 2L), (Double.NaN, 0L), (-0.0, 4L),
+      (0.0, 3L), (1.0, 5L))
+    def run(k: Int, desc: Boolean, rows: Seq[(Double, Long)]): Seq[(Double, Long)] = {
+      val agg = new graft.functions.TopKPairs(k, desc)
+      agg.finish(rows.foldLeft(agg.zero)(agg.reduce))
+    }
+    // NaN == NaN compares false, so render keys for the comparison
+    def show(r: Seq[(Double, Long)]) = r.map { case (v, id) => (v.toString, id) }
+    for (k <- Seq(2, 3, 6); desc <- Seq(false, true))
+      assert(show(run(k, desc, in)) == show(run(k, desc, in.reverse)),
+        s"k=$k desc=$desc depends on arrival order")
+    // ascending: -0.0 and 0.0 tie on key and break by id; NaN sorts last
+    assert(run(6, desc = false, in).map(_._2) == Seq(3L, 4L, 2L, 5L, 0L, 1L))
+    // descending: NaN is largest, so it leads
+    assert(run(3, desc = true, in).map(_._2) == Seq(0L, 1L, 5L))
+  }
 }
